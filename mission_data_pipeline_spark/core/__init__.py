@@ -4,7 +4,7 @@ The "dataset contract" between stages is :class:`TelemetryBatch` — two
 lazy DataFrames (packets, tidy params) plus metadata — the Spark
 restatement of the reference's ``TelemetryDataset``
 (``src/mdp/models/dataset.py:14-24``). Stages declare transformations;
-Spark executes them when a loader (or count) forces an action, so a
+Spark executes them when a loader forces an action, so a
 whole Extract→Transform*→Load chain is ONE Catalyst plan per batch.
 """
 

@@ -6,11 +6,11 @@ Transformer / Loader`` ABCs, Pydantic configs validated at construction
 
 The Spark restatement: a stage body manipulates *lazy DataFrames*.
 ``Transformer.transform`` maps batch→batch by extending the logical
-plan; nothing executes until a Loader (or an explicit count) forces an
-action, so the chain compiles to one Catalyst plan per batch. The
-reference's custom-plugin story ("any class implementing the ABC",
-``README.md`` §Extending MDP) carries over unchanged — a custom
-Transformer is just a DataFrame→DataFrame function with a config.
+plan; nothing executes until a Loader forces an action, so the chain
+compiles to one Catalyst plan per batch. The reference's custom-plugin
+story ("any class implementing the ABC", ``README.md`` §Extending MDP)
+carries over unchanged — a custom Transformer is just a
+DataFrame→DataFrame function with a config.
 """
 
 from __future__ import annotations
@@ -42,16 +42,6 @@ class TelemetryBatch:
     packets: DataFrame | None = None
     params: DataFrame | None = None
     metadata: dict[str, Any] = field(default_factory=dict)
-
-    def row_count(self) -> int:
-        """Rows across both sides — forces an action; used only when the
-        pipeline is configured to account per-stage record counts."""
-        n = 0
-        if self.packets is not None:
-            n += self.packets.count()
-        if self.params is not None:
-            n += self.params.count()
-        return n
 
     def with_metadata(self, **kv: Any) -> TelemetryBatch:
         return TelemetryBatch(
@@ -96,7 +86,13 @@ class Transformer(Stage):
 
 
 class Loader(Stage):
-    """Forces the plan: writes the batch to a sink, returns rows written."""
+    """Forces the plan: writes the batch to a sink (the batch's one action).
+
+    ``load`` returns the rows written, or None for "the rows of the
+    loaded batch's ``params`` side": the pipeline then reads that count
+    from the observation on ``params``, so the loader needs no extra
+    ``count()`` job.
+    """
 
     @abstractmethod
-    def load(self, batch: TelemetryBatch) -> int: ...
+    def load(self, batch: TelemetryBatch) -> int | None: ...

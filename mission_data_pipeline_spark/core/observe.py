@@ -4,26 +4,31 @@ Parity: reference ``src/mdp/observability/metrics.py:60-77`` feeds
 ``record_stage`` with per-stage record counts. The reference is eager
 (pandas frames — ``len(df)`` is free); a naive Spark translation forces
 ``count()`` per stage, which re-executes every batch's plan once per
-stage (a 3-transformer batch runs the scan ~7x). The Spark-first
-mechanism is `CollectMetrics`: attach ``df.observe(name, count(*))`` to
-each stage's output DataFrames and harvest the counts as a *side effect
-of the batch's single action* (the loader's write / collect). One job
-per batch; counts are exact, not sampled.
+stage. The Spark-first mechanism is `CollectMetrics`: attach
+``df.observe(name, count(*))`` to the DataFrame sides a batch passes
+through and harvest the counts as a *side effect of the batch's single
+action* (the loader's write). Counts are exact, not sampled.
 
-Harvest is **non-blocking**: :meth:`pyspark.sql.Observation.get` blocks
-forever on a DataFrame branch the action never executed (e.g. a loader
-that writes only ``params`` while ``packets`` was observed), so we go
-through the JVM ``Observation.getRowOrEmpty`` (an ``Option[Row]``)
-instead and report ``-1`` (unknown) for branches that saw no action.
-A bounded poll loop absorbs the listener-bus notification delay, which
-is normally sub-millisecond after the action returns.
+Observations are per DataFrame *side*, not per stage boundary. A side a
+stage passes through unchanged (the same object as upstream) shares the
+upstream side's observation: decom and calibration leave ``packets``
+untouched, and the ``packets`` observation sits inside the ``params``
+plan, so a loader that writes only ``params`` still resolves it.
+
+Harvest polls every side once, without blocking: Spark delivers
+observed metrics before the action returns. :meth:`Observation.get`
+would block forever on a side the action never executed, so the poll
+goes through the JVM ``Observation.getRowOrEmpty`` (an ``Option[Row]``).
+A side still unresolved after its poll — a branch the action did not
+run, or an action such as ``toLocalIterator`` that reports no metrics —
+is counted once with ``count()``.
 """
 
 from __future__ import annotations
 
 import logging
-import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -40,8 +45,8 @@ def _row_or_none(obs: Observation) -> dict | None:
 
     Uses the JVM ``getRowOrEmpty`` bridge (same decode path as PySpark's
     own blocking ``Observation.get``). If a future PySpark reshuffles the
-    private surface we degrade to "unknown" rather than blocking a
-    pipeline on a dead branch.
+    private surface the side reads as unresolved and is counted, rather
+    than blocking a pipeline on a dead branch.
     """
     global _warned_private_api
     try:
@@ -54,89 +59,83 @@ def _row_or_none(obs: Observation) -> dict | None:
             obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils"  # noqa: SLF001
         )
         return CPickleSerializer().loads(utils.toPyRow(jopt.get())).asDict()
-    except Exception:  # noqa: BLE001 - private-API drift → unknown, not a crash
+    except Exception:  # noqa: BLE001 - private-API drift → count, not a crash
         if not _warned_private_api:
             _warned_private_api = True
             log.warning(
-                "Observation.getRowOrEmpty bridge unavailable; "
-                "observe-mode record counts will read as -1 (unknown). "
-                "Set count_method='count' for exact legacy accounting."
+                "Observation.getRowOrEmpty bridge unavailable; every "
+                "observed side is counted with count() after the action."
             )
         return None
 
 
-class ObservationGroup:
-    """Row-count observations over both sides of one TelemetryBatch.
+class Side:
+    """One observed DataFrame side; ``rows`` is -1 until harvested."""
 
-    Each side (packets / params) resolves independently, so a batch
-    whose action only touched one side still reports that side's exact
-    count; the dead side can be backfilled with a bounded ``count()``
-    via :meth:`resolve_by_counting` (one extra batch-sized job) instead
-    of silently reading -1.
-    """
+    __slots__ = ("df", "obs", "rows")
 
-    def __init__(self, tag: str) -> None:
-        self.tag = tag
-        self._obs: list[tuple[Observation, DataFrame]] = []
-        self._counts: dict[int, int] = {}
+    def __init__(self, df: DataFrame, tag: str) -> None:
+        self.obs = Observation(f"mdps:{tag}:{uuid.uuid4().hex[:8]}")
+        self.df = df.observe(self.obs, F.count(F.lit(1)).alias("rows"))
+        self.rows = -1
 
-    def _wrap(self, df: DataFrame, side: str) -> DataFrame:
-        o = Observation(f"mdps:{self.tag}:{side}:{uuid.uuid4().hex[:8]}")
-        observed = df.observe(o, F.count(F.lit(1)).alias("rows"))
-        self._obs.append((o, observed))
-        return observed
 
-    def attach(self, batch: TelemetryBatch) -> TelemetryBatch:
-        packets = (
-            self._wrap(batch.packets, "packets") if batch.packets is not None else None
-        )
-        params = (
-            self._wrap(batch.params, "params") if batch.params is not None else None
-        )
-        return TelemetryBatch(packets=packets, params=params, metadata=batch.metadata)
+class Boundary(NamedTuple):
+    """The observed sides of a batch at one stage boundary."""
 
-    def try_resolve(self) -> bool:
-        """One non-blocking poll; caches per-side counts as they land."""
-        for i, (o, _df) in enumerate(self._obs):
-            if i in self._counts:
-                continue
-            row = _row_or_none(o)
-            if row is not None:
-                self._counts[i] = int(row["rows"])
-        return len(self._counts) == len(self._obs)
-
-    def resolve_by_counting(self) -> int:
-        """Backfill any still-unresolved side with a direct bounded
-        ``count()`` (one batch-sized job per dead side) and return the
-        total. The fallback for dead branches the action never ran."""
-        for i, (_o, df) in enumerate(self._obs):
-            if i not in self._counts:
-                self._counts[i] = df.count()
-        return self.rows
-
-    @property
-    def unresolved_sides(self) -> int:
-        return len(self._obs) - len(self._counts)
+    packets: Side | None
+    params: Side | None
 
     @property
     def rows(self) -> int:
-        """Harvested count, or -1 if (part of) the batch saw no action."""
-        if self._obs and len(self._counts) == len(self._obs):
-            return sum(self._counts.values())
-        return -1
+        """Rows across both sides, or -1 if a side is unresolved."""
+        sides = [s for s in self if s is not None]
+        if not sides or any(s.rows < 0 for s in sides):
+            return -1
+        return sum(s.rows for s in sides)
 
 
-def harvest_groups(groups: list[ObservationGroup], timeout_s: float) -> None:
-    """Resolve as many groups as possible within ``timeout_s``.
+class BatchObservations:
+    """Row-count observations over the DataFrame sides of one batch."""
 
-    The listener bus normally delivers metrics before the action call
-    returns, so the fast path is a single zero-sleep sweep. Groups on
-    dead branches (never executed) stay unresolved and read as -1.
-    """
-    deadline = time.monotonic() + timeout_s
-    while True:
-        if all(g.try_resolve() for g in groups):
-            return
-        if time.monotonic() >= deadline:
-            return
-        time.sleep(0.02)
+    def __init__(self, tag: str) -> None:
+        self.tag = tag
+        self._sides: list[Side] = []
+
+    def _side(self, df: DataFrame | None, tag: str) -> Side | None:
+        if df is None:
+            return None
+        for side in self._sides:
+            if side.df is df:  # passed through unchanged: share it
+                return side
+        side = Side(df, f"{self.tag}:{tag}")
+        self._sides.append(side)
+        return side
+
+    def attach(
+        self, batch: TelemetryBatch, stage: str
+    ) -> tuple[TelemetryBatch, Boundary]:
+        """Observe ``batch``'s sides; returns the observed batch (pass it
+        downstream) and its boundary."""
+        b = Boundary(
+            self._side(batch.packets, f"{stage}:packets"),
+            self._side(batch.params, f"{stage}:params"),
+        )
+        observed = TelemetryBatch(
+            packets=b.packets.df if b.packets else None,
+            params=b.params.df if b.params else None,
+            metadata=batch.metadata,
+        )
+        return observed, b
+
+    def harvest(self) -> None:
+        """Resolve every side: one poll each, ``count()`` if unresolved.
+
+        Downstream sides go first, so one ``count()`` of a derived side
+        also resolves the upstream observations inside its plan.
+        """
+        for side in reversed(self._sides):
+            if side.rows >= 0:
+                continue
+            row = _row_or_none(side.obs)
+            side.rows = int(row["rows"]) if row is not None else side.df.count()

@@ -15,27 +15,14 @@ Parity: reference ``src/mdp/core/pipeline.py:69-195`` — semantics P1–P8
 - P6 ``max_batches``; P7 result objects; P8 SUCCESS iff zero errors.
 
 Unlike the reference, hooks actually fire (R2) and per-stage metrics are
-actually recorded (R3). Record accounting (``count_records=True``, the
-default) has two methods:
-
-- ``count_method="observe"`` (default): every stage output gets a
-  ``df.observe(count(*))`` node and the counts are harvested as a side
-  effect of the batch's **single** action (the loader's write) — one
-  Spark job per batch, exact counts. A DataFrame branch the action
-  never executed (e.g. a packets side the loader ignores) is backfilled
-  with one bounded ``count()`` job per dead side by default
-  (``observe_dead_branch="count"``); set it to ``"unknown"`` to keep
-  ``-1`` with zero extra jobs (logged once per run). Batches aborted
-  before any action ran always read ``-1``.
-  Because counts only exist after the action, ``batch.extracted`` /
-  ``batch.transformed`` hooks fire with ``records=-1`` in this mode;
-  StageResult / metrics are backfilled post-action.
-- ``count_method="count"``: the legacy eager path — a ``count()``
-  action per stage per batch. Exact and available at hook-fire time,
-  but re-executes the plan built so far once per stage (a 3-transformer
-  batch runs the scan ~7x). Use only for debugging small batches.
-
-``count_records=False`` disables accounting entirely (all counts -1).
+actually recorded (R3). Record accounting has one path, with no options
+(``core/observe.py``): every DataFrame side a stage produces gets a
+``df.observe(count(*))`` node, and the counts are harvested after the
+batch's single action (the loader's write). A side the action never
+executed is counted once with ``count()``. Because counts only exist
+after the action, ``batch.extracted`` / ``batch.transformed`` hooks
+fire with ``records=-1``; StageResult and metrics are filled in after
+the harvest. A batch aborted before any action ran reads ``-1``.
 """
 
 from __future__ import annotations
@@ -43,7 +30,6 @@ from __future__ import annotations
 import logging
 import time
 from collections.abc import Iterator
-from typing import Literal
 
 from pydantic import BaseModel
 from pyspark.sql import SparkSession
@@ -55,8 +41,9 @@ from mission_data_pipeline_spark.core.base import (
     Transformer,
 )
 from mission_data_pipeline_spark.core.observe import (
-    ObservationGroup,
-    harvest_groups,
+    BatchObservations,
+    Boundary,
+    Side,
 )
 from mission_data_pipeline_spark.core.results import (
     PipelineResult,
@@ -68,6 +55,11 @@ from mission_data_pipeline_spark.observability.metrics import PipelineMetrics
 
 log = logging.getLogger("mission_data_pipeline_spark.pipeline")
 
+# A stage result whose counts are filled in after the harvest: the
+# boundary it read, and the boundary or side it produced (or the rows
+# a loader reported writing).
+_Pending = tuple[StageResult, Boundary, Boundary | Side | int]
+
 
 class PipelineConfig(BaseModel):
     model_config = {"frozen": True, "extra": "forbid"}
@@ -76,15 +68,6 @@ class PipelineConfig(BaseModel):
     stop_on_error: bool = True
     dry_run: bool = False
     max_batches: int | None = None
-    count_records: bool = True
-    count_method: Literal["observe", "count"] = "observe"
-    observe_timeout_s: float = 1.0
-    # Dead-branch policy for observe mode: a DataFrame side the batch's
-    # action never executed has no observed count. "count" (default)
-    # backfills it with one bounded count() job per dead side, so
-    # default-mode accounting never silently reports -1 after an action
-    # ran; "unknown" keeps -1 (zero extra jobs) and logs once per run.
-    observe_dead_branch: Literal["count", "unknown"] = "count"
 
 
 class Pipeline:
@@ -108,7 +91,6 @@ class Pipeline:
         self.loader = loader
         self.hooks = hooks or HookManager()
         self.metrics = metrics or PipelineMetrics()
-        self._warned_dead_branch = False
 
     # -- timed stage wrappers (P1: setup/teardown even on error) --------
 
@@ -124,16 +106,6 @@ class Pipeline:
             return None, elapsed, exc
         finally:
             stage.teardown()
-
-    @property
-    def _observing(self) -> bool:
-        return self.config.count_records and self.config.count_method == "observe"
-
-    def _count(self, batch: TelemetryBatch) -> int:
-        """Eager per-stage count — legacy ``count_method='count'`` only."""
-        if self.config.count_records and self.config.count_method == "count":
-            return batch.row_count()
-        return -1
 
     # -- run -------------------------------------------------------------
 
@@ -155,7 +127,7 @@ class Pipeline:
                     False,
                 )
                 try:
-                    stop = self._run_batch(spark, batch, result)
+                    stop = self._run_batch(batch, result)
                 finally:
                     sc.setJobGroup(None, None)  # type: ignore[arg-type]
                 if stop:
@@ -190,181 +162,99 @@ class Pipeline:
         )
         return result
 
-    def _run_batch(
-        self,
-        spark: SparkSession,
-        batch: TelemetryBatch,
-        result: PipelineResult,
-    ) -> bool:
+    def _run_batch(self, batch: TelemetryBatch, result: PipelineResult) -> bool:
         """Runs one batch through transformers + loader.
 
         Returns True if the run must stop (stop_on_error hit).
         """
         cfg = self.config
-        observing = self._observing
+        n_batch = result.batches_processed
+        obs = BatchObservations(f"b{n_batch}")
+        current, boundary = obs.attach(batch, "extract")
+        extracted = boundary
+        pending: list[_Pending] = []
+        self.hooks.fire("batch.extracted", batch=n_batch, records=-1)
 
-        # groups[i] = observation over the output of stage boundary i
-        # (0 = extractor output); deferred[(sr, in_idx, out_idx, fixed_out)]
-        # is backfilled from harvested counts after the batch's action.
-        # fixed_out (loader rows-written) overrides the observed out count.
-        groups: list[ObservationGroup] = []
-        deferred: list[tuple[StageResult, int, int, int | None]] = []
-
-        if observing:
-            g = ObservationGroup(f"b{result.batches_processed}:extract")
-            batch = g.attach(batch)
-            groups.append(g)
-            n_in = -1
-        else:
-            n_in = self._count(batch)
-            result.total_packets += max(n_in, 0)
-            self.metrics.record_batch(max(n_in, 0))
-        self.hooks.fire(
-            "batch.extracted", batch=result.batches_processed, records=n_in
-        )
-
-        current = batch
         stopping = False
         for tr in self.transformers:
             tname = type(tr).__name__
             out, elapsed, exc = self._timed(tr, lambda t=tr, b=current: t.transform(b))
             if exc is None:
-                if observing:
-                    g = ObservationGroup(f"b{result.batches_processed}:{tname}")
-                    out = g.attach(out)
-                    groups.append(g)
-                    sr = StageResult(tname, StageStatus.SUCCESS, elapsed, -1, -1)
-                    result.stage_results.append(sr)
-                    deferred.append((sr, len(groups) - 2, len(groups) - 1, None))
-                    n_out = -1
-                else:
-                    n_out = self._count(out)
-                    result.stage_results.append(
-                        StageResult(tname, StageStatus.SUCCESS, elapsed, n_in, n_out)
-                    )
-                    self.metrics.record_stage(
-                        tname, elapsed_s=elapsed, records_in=n_in, records_out=n_out
-                    )
-                current = out
-                n_in = n_out
-            else:
-                # P2: batch continues unchanged; remaining transformers of
-                # this batch are skipped either way.
-                sr = StageResult(
-                    tname, StageStatus.FAILED, elapsed, n_in, n_in, str(exc)
-                )
+                current, out_boundary = obs.attach(out, tname)
+                sr = StageResult(tname, StageStatus.SUCCESS, elapsed)
                 result.stage_results.append(sr)
-                if observing:
-                    # in == out == upstream count (batch passes unchanged)
-                    deferred.append((sr, len(groups) - 1, len(groups) - 1, None))
-                result.errors.append(f"{tname}: {exc}")
-                self.metrics.record_stage(tname, elapsed_s=elapsed, error=True)
-                self.hooks.fire("stage.error", stage=tname, error=exc)
-                if cfg.stop_on_error:
-                    stopping = True
-                break
-        self.hooks.fire(
-            "batch.transformed", batch=result.batches_processed, records=n_in
-        )
+                pending.append((sr, boundary, out_boundary))
+                boundary = out_boundary
+                continue
+            # P2: batch continues unchanged (in == out == upstream count);
+            # remaining transformers of this batch are skipped either way.
+            sr = StageResult(tname, StageStatus.FAILED, elapsed, error=str(exc))
+            result.stage_results.append(sr)
+            pending.append((sr, boundary, boundary))
+            result.errors.append(f"{tname}: {exc}")
+            self.metrics.record_stage(tname, elapsed_s=elapsed, error=True)
+            self.hooks.fire("stage.error", stage=tname, error=exc)
+            stopping = cfg.stop_on_error
+            break
+        self.hooks.fire("batch.transformed", batch=n_batch, records=-1)
 
-        action_ran = False
         if not stopping:
-            action_ran = self._load(spark, current, n_in, len(groups) - 1,
-                                    groups, deferred, result)
-            if action_ran is None:  # loader failed with stop_on_error
-                stopping = True
-                action_ran = False
+            stopping = self._load(current, boundary, obs, pending, result)
 
-        if observing:
-            if action_ran:
-                harvest_groups(groups, cfg.observe_timeout_s)
-                dead = [g for g in groups if g.unresolved_sides]
-                if dead:
-                    if cfg.observe_dead_branch == "count":
-                        for g in dead:
-                            g.resolve_by_counting()
-                    elif not self._warned_dead_branch:
-                        self._warned_dead_branch = True
-                        log.warning(
-                            "observe-mode: %d stage boundary(ies) had a "
-                            "DataFrame side the action never executed; "
-                            "their counts read -1 (unknown). Set "
-                            "observe_dead_branch='count' for a bounded "
-                            "fallback count.",
-                            len(dead),
-                        )
-            # backfill from whatever resolved (-1 where no action ran)
-            counts = [g.rows for g in groups]
-            result.total_packets += max(counts[0], 0)
-            self.metrics.record_batch(max(counts[0], 0))
-            for sr, i_in, i_out, fixed_out in deferred:
-                sr.records_in = counts[i_in]
-                sr.records_out = fixed_out if fixed_out is not None else counts[i_out]
-                if sr.status is StageStatus.SUCCESS:
-                    self.metrics.record_stage(
-                        sr.stage_name,
-                        elapsed_s=sr.elapsed_s,
-                        records_in=max(counts[i_in], 0),
-                        records_out=max(sr.records_out, 0),
-                    )
+        # counts read -1 where no action ran
+        result.total_packets += max(extracted.rows, 0)
+        self.metrics.record_batch(max(extracted.rows, 0))
+        for sr, b_in, out in pending:
+            sr.records_in = b_in.rows
+            sr.records_out = out if isinstance(out, int) else out.rows
+            if sr.status is StageStatus.SUCCESS:
+                self.metrics.record_stage(
+                    sr.stage_name,
+                    elapsed_s=sr.elapsed_s,
+                    records_in=max(sr.records_in, 0),
+                    records_out=max(sr.records_out, 0),
+                )
         return stopping
 
     def _load(
         self,
-        spark: SparkSession,
         current: TelemetryBatch,
-        n_in: int,
-        last_group: int,
-        groups: list[ObservationGroup],
-        deferred: list[tuple[StageResult, int, int, int | None]],
+        boundary: Boundary,
+        obs: BatchObservations,
+        pending: list[_Pending],
         result: PipelineResult,
-    ) -> bool | None:
-        """Returns True if an action ran, False if skipped, None on
-        loader failure with stop_on_error."""
+    ) -> bool:
+        """Runs the batch's one action and harvests its observations.
+
+        Returns True if the run must stop (loader failed, stop_on_error).
+        """
         cfg = self.config
-        if self.loader is None or cfg.dry_run:
-            if cfg.dry_run and self.loader is not None:
-                # force the plan so transform-time errors still surface
-                # (and, in observe mode, so the observations resolve)
-                current.row_count()
-                result.stage_results.append(
-                    StageResult(type(self.loader).__name__, StageStatus.SKIPPED)
-                )
-                return True
-            if self.loader is None and self._observing and groups:
-                # no loader at all: nothing forces the plan; counts stay -1
-                return False
+        if self.loader is None:
+            return False  # nothing forces the plan; counts stay -1
+        lname = type(self.loader).__name__
+        if cfg.dry_run:
+            # counting every side forces the plan, so transform-time
+            # errors still surface
+            obs.harvest()
+            result.stage_results.append(StageResult(lname, StageStatus.SKIPPED))
             return False
 
-        lname = type(self.loader).__name__
         out, elapsed, exc = self._timed(
             self.loader, lambda: self.loader.load(current)
         )
-        if exc is None:
-            n_loaded = out if isinstance(out, int) else n_in
-            sr = StageResult(lname, StageStatus.SUCCESS, elapsed, n_in, n_loaded)
-            result.stage_results.append(sr)
-            if self._observing:
-                # records_in backfills from the last observation; the
-                # loader's integer return stays authoritative for out.
-                fixed = out if isinstance(out, int) else None
-                deferred.append((sr, last_group, last_group, fixed))
-            else:
-                self.metrics.record_stage(
-                    lname, elapsed_s=elapsed,
-                    records_in=max(n_in, 0), records_out=max(n_loaded, 0),
-                )
-            self.hooks.fire(
-                "batch.loaded", batch=result.batches_processed, records=n_loaded
+        if exc is not None:  # P3
+            result.stage_results.append(
+                StageResult(lname, StageStatus.FAILED, elapsed, -1, 0, str(exc))
             )
-            return True
-        # P3
-        result.stage_results.append(
-            StageResult(lname, StageStatus.FAILED, elapsed, n_in, 0, str(exc))
-        )
-        result.errors.append(f"{lname}: {exc}")
-        self.metrics.record_stage(lname, elapsed_s=elapsed, error=True)
-        self.hooks.fire("stage.error", stage=lname, error=exc)
-        if cfg.stop_on_error:
-            return None
+            result.errors.append(f"{lname}: {exc}")
+            self.metrics.record_stage(lname, elapsed_s=elapsed, error=True)
+            self.hooks.fire("stage.error", stage=lname, error=exc)
+            return cfg.stop_on_error
+        obs.harvest()
+        sr = StageResult(lname, StageStatus.SUCCESS, elapsed)
+        result.stage_results.append(sr)
+        # None: rows written = the loaded batch's params rows
+        written = out if isinstance(out, int) else (boundary.params or boundary).rows
+        pending.append((sr, boundary, written))
+        self.hooks.fire("batch.loaded", batch=result.batches_processed, records=written)
         return False

@@ -251,30 +251,6 @@ def _np_argmax_udf(cents: list[tuple[int, list[float]]], *, round_digits: int = 
     return assign
 
 
-def lsh_buckets(
-    df: DataFrame,
-    *,
-    bits: int = 8,
-    tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """(id, table, bucket) — one row per hash table.
-
-    All ``tables`` sketches are computed in ONE pass over the input
-    (one Arrow-batched matmul + posexplode), not one scan per table:
-    at 100 TB the corpus is read exactly once.
-    """
-    if dim is None:
-        dim = _vec_dim(df, vec_col)
-    buckets = _np_bucket_udf(bits=bits, tables=tables, dim=dim)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"),
-    )
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

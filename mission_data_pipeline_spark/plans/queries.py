@@ -58,18 +58,20 @@ def __getattr__(name):
 # build-side CTE pair, the substring-dedup default revert, the two
 # read_packets consumers of the mapInArrow scan, the eight jpeg/flac-
 # consuming media queries after the batched IDCT, and the heldout LM
-# scorer whose train side gained the opt-in single-pass form). Slots
-# 16-42 retire the ENTIRE remaining r09-stale overflow (the queries
+# scorer whose train side gained the opt-in single-pass form in slots
+# 1-15; the shard-build capstone and html_extract, whose plans also
+# changed, in 16-17). Slots 18-44 retire the ENTIRE remaining r09-stale overflow (the queries
 # the r14 cut displaced — after this round no driver check is older
 # than r10, VERDICT r14 item 9). The cut at 50 keeps the FIVE
 # designated STATIC PURE-SQL roll-overs (oracle+lint+perturb-swept
 # locally at sf0.01 AND sfx1 every round by scripts/round_gate.sh)
 # placed AT the cut so the r13 slot-51 staleness failure mode cannot
-# recur; the three alphabetically-first r10-stale queries fill slots 43-45.
+# recur (slots 46-50); the alphabetically-first r10-stale query fills
+# slot 45.
 # ---------------------------------------------------------------------------
 
 _CHECK_FIRST = [
-    # --- r15 plan-changed / Python-internals-changed (slots 1-15) ---
+    # --- r15 plan-changed / Python-internals-changed (slots 1-17) ---
     "q3_shipping_priority",
     "q3_bucketed_colocated",
     "x2_substring_dedup",
@@ -120,7 +122,7 @@ _CHECK_FIRST = [
     # and html_extract, whose plans changed this round and MUST be in
     # the window) ---
     "agg_global_stats",
-    # --- the designated static pure-SQL roll-overs AT the cut ---
+    # --- the designated static pure-SQL roll-overs AT the cut (46-50) ---
     "set_except",
     "set_bag_semantics_all",
     "join_anti",

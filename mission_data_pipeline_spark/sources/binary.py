@@ -379,6 +379,11 @@ def _gathered_binary(a, starts, ends):
 
     lens = ends - starts
     total = int(lens.sum())
+    if total >= 2**31:  # before the gather index is built
+        raise ValueError(
+            f"{total} payload bytes in one range overflow the int32 offsets "
+            "of an Arrow binary column; use a smaller split_size"
+        )
     # concatenated gather indices: for each packet i, the range
     # [starts[i], ends[i]) — built with repeat/arange, no Python loop
     pos = np.cumsum(lens) - lens

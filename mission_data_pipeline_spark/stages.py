@@ -261,7 +261,7 @@ class ParquetLoader(Loader):
         super().__init__(config)
         self._batches_seen = 0
 
-    def load(self, batch: TelemetryBatch) -> int:
+    def load(self, batch: TelemetryBatch) -> None:
         from mission_data_pipeline_spark.sinks import (
             write_parquet_per_parameter,
             write_parquet_wide,
@@ -273,7 +273,6 @@ class ParquetLoader(Loader):
         # Across batches of one run, only the first write may truncate.
         overwrite = cfg.overwrite and self._batches_seen == 0
         self._batches_seen += 1
-        n = batch.params.count()
         if cfg.layout == "wide":
             write_parquet_wide(
                 batch.params,
@@ -289,7 +288,6 @@ class ParquetLoader(Loader):
                 partition_by_apid=cfg.partition_by_apid,
                 overwrite=overwrite,
             )
-        return n
 
 
 class CsvLoaderConfig(StageConfig):
@@ -309,7 +307,7 @@ class CsvLoader(Loader):
         super().__init__(config)
         self._batches_seen = 0
 
-    def load(self, batch: TelemetryBatch) -> int:
+    def load(self, batch: TelemetryBatch) -> None:
         from mission_data_pipeline_spark.sinks import (
             write_csv_per_parameter,
             write_csv_wide,
@@ -320,7 +318,6 @@ class CsvLoader(Loader):
             raise ValueError("csv loader requires a params DataFrame")
         overwrite = cfg.overwrite and self._batches_seen == 0
         self._batches_seen += 1
-        n = batch.params.count()
         writer = write_csv_wide if cfg.layout == "wide" else write_csv_per_parameter
         writer(
             batch.params,
@@ -328,7 +325,6 @@ class CsvLoader(Loader):
             overwrite=overwrite,
             float_digits=cfg.float_digits,
         )
-        return n
 
 
 class Hdf5LoaderConfig(StageConfig):
@@ -346,7 +342,7 @@ class Hdf5Loader(Loader):
         super().__init__(config)
         self._batches_seen = 0
 
-    def load(self, batch: TelemetryBatch) -> int:
+    def load(self, batch: TelemetryBatch) -> None:
         from mission_data_pipeline_spark.sinks import write_hdf5
 
         cfg: Hdf5LoaderConfig = self.config  # type: ignore[assignment]
@@ -354,6 +350,4 @@ class Hdf5Loader(Loader):
             raise ValueError("hdf5 loader requires a params DataFrame")
         mode = "w" if (cfg.overwrite and self._batches_seen == 0) else "a"
         self._batches_seen += 1
-        n = batch.params.count()
         write_hdf5(batch.params, cfg.output_path, mode=mode)
-        return n

@@ -21,6 +21,7 @@ from mission_data_pipeline_spark.core.base import (
     TelemetryBatch,
     Transformer,
 )
+from mission_data_pipeline_spark.core.observe import BatchObservations
 from mission_data_pipeline_spark.observability.hooks import HookManager
 from mission_data_pipeline_spark.observability.metrics import PipelineMetrics
 
@@ -46,22 +47,17 @@ class StreamingPipeline:
         self.stream_is_params = stream_is_params
 
     def _process_batch(self, df: DataFrame, epoch_id: int) -> None:
-        # Input-count accounting via df.observe (core/observe.py), the
-        # same one-action-per-batch discipline as the batch Pipeline:
-        # an eager df.count() here would re-execute the micro-batch's
-        # source read once per epoch just for the metric. The count
-        # resolves as a side effect of the loader's action; with no
-        # loader, a count() IS the only action, so it is used directly.
-        from mission_data_pipeline_spark.core.observe import (
-            ObservationGroup,
-            harvest_groups,
-        )
-
-        group = ObservationGroup(f"stream-epoch{epoch_id}")
-        batch = group.attach(
+        # Record accounting via df.observe (core/observe.py), the same
+        # one-action-per-batch discipline as the batch Pipeline: an eager
+        # df.count() here would re-execute the micro-batch's source read
+        # once per epoch just for the metric. With no loader, the
+        # harvest's count() of each side is the batch's only action.
+        obs = BatchObservations(f"stream-epoch{epoch_id}")
+        batch, extracted = obs.attach(
             TelemetryBatch(params=df, metadata={"epoch": epoch_id})
             if self.stream_is_params
-            else TelemetryBatch(packets=df, metadata={"epoch": epoch_id})
+            else TelemetryBatch(packets=df, metadata={"epoch": epoch_id}),
+            "extract",
         )
         self.hooks.fire("batch.extracted", batch=epoch_id, records=-1)
         stage_elapsed: list[tuple[str, float]] = []
@@ -69,6 +65,7 @@ class StreamingPipeline:
             t0 = time.perf_counter()
             batch = tr.transform(batch)
             stage_elapsed.append((type(tr).__name__, time.perf_counter() - t0))
+        batch, loaded = obs.attach(batch, "load")
         self.hooks.fire("batch.transformed", batch=epoch_id, records=-1)
         written = None
         load_elapsed = 0.0
@@ -76,28 +73,23 @@ class StreamingPipeline:
             t0 = time.perf_counter()
             written = self.loader.load(batch)
             load_elapsed = time.perf_counter() - t0
-            harvest_groups([group], timeout_s=1.0)
-            n = group.rows
-        else:
-            n = batch.row_count()  # no loader: this IS the only action
-        if n >= 0:
-            # Only record resolved counts: an unresolved observe harvest
-            # (timeout / dead branch → -1) must not masquerade as a
-            # genuinely-empty batch.  Hooks keep the -1 convention.
-            self.metrics.record_batch(n)
-            for name, elapsed in stage_elapsed:
-                self.metrics.record_stage(
-                    name, elapsed_s=elapsed, records_in=n
-                )
+        obs.harvest()
+        n = extracted.rows
+        self.metrics.record_batch(n)
+        for name, elapsed in stage_elapsed:
+            self.metrics.record_stage(name, elapsed_s=elapsed, records_in=n)
         if self.loader is not None:
-            n_loaded = written if isinstance(written, int) else max(n, 0)
-            if n >= 0 or isinstance(written, int):
-                self.metrics.record_stage(
-                    type(self.loader).__name__,
-                    elapsed_s=load_elapsed,
-                    records_in=max(n, 0),
-                    records_out=n_loaded,
-                )
+            # None: rows written = the loaded batch's params rows
+            n_loaded = (
+                written if isinstance(written, int)
+                else (loaded.params or loaded).rows
+            )
+            self.metrics.record_stage(
+                type(self.loader).__name__,
+                elapsed_s=load_elapsed,
+                records_in=loaded.rows,
+                records_out=n_loaded,
+            )
             self.hooks.fire("batch.loaded", batch=epoch_id, records=n_loaded)
 
     def start(

@@ -323,3 +323,19 @@ def test_ccsds_stream_reader_byte_budget_and_stuck_tail(tmp_path):
     assert o["files"][f"{src}/a.bin"] == size
     it, o = skip.read(o)
     assert list(it) == []        # clean: nothing re-read afterwards
+
+
+def test_gathered_binary_rejects_int32_offset_overflow():
+    """A range with more than 2**31 payload bytes must raise before the
+    gather index is built: int32 Arrow offsets would silently wrap. The
+    spans cover 2**47 bytes of a 16-byte buffer, so code that skipped the
+    check fails its first allocation instead of exhausting memory."""
+    import numpy as np
+
+    from mission_data_pipeline_spark.sources.binary import _gathered_binary
+
+    a = np.zeros(16, dtype=np.uint8)
+    starts = np.zeros(4, dtype=np.int64)
+    ends = np.full(4, 2**45, dtype=np.int64)
+    with pytest.raises(ValueError, match="int32 offsets"):
+        _gathered_binary(a, starts, ends)

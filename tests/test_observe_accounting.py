@@ -1,11 +1,11 @@
-"""R3 observe-mode accounting: exact per-stage counts from ONE job/batch.
+"""R3 record accounting: exact per-stage counts from ONE job/batch.
 
-The scale contract (VERDICT r05 #1): with ``count_method="observe"``
-(the default), per-stage ``records_in/out`` come from
-``df.observe(count(*))`` harvested after the batch's single action —
-the legacy ``count_method="count"`` path re-executes the plan once per
-stage. Reference semantics matched: ``src/mdp/observability/metrics.py
-:60-77`` (record_stage fed with real counts).
+The scale contract (VERDICT r05 #1): per-stage ``records_in/out`` come
+from ``df.observe(count(*))`` on each DataFrame side, harvested after
+the batch's single action — never from a ``count()`` per stage, which
+would re-execute the plan once per stage. Reference semantics matched:
+``src/mdp/observability/metrics.py:60-77`` (record_stage fed with real
+counts).
 """
 
 from collections.abc import Iterator
@@ -90,26 +90,11 @@ def test_observe_mode_counts_and_single_job(spark):
     assert snap["stages"]["NoopLoader"]["records_out"] == 10
 
     # THE scale assertion: one Spark job per batch (observe mode never
-    # forces extra actions; legacy count mode would run 4 jobs/batch here)
+    # forces extra actions; a count() per stage would run 4 jobs/batch)
     tracker = spark.sparkContext.statusTracker()
     for b in (1, 2):
         jobs = tracker.getJobIdsForGroup(f"mdps:obsjob:batch{b}")
         assert len(jobs) == 1, f"batch {b}: expected exactly 1 job, got {jobs}"
-
-
-def test_count_mode_still_exact_but_multi_job(spark):
-    p = Pipeline(
-        {"name": "cntjob", "count_method": "count"},
-        extractor=RangeExtractor(n_batches=1, rows=10),
-        transformers=[HalvingFilter()],
-        loader=NoopLoader(),
-    )
-    r = p.run(spark)
-    assert r.ok
-    halv = next(s for s in r.stage_results if s.stage_name == "HalvingFilter")
-    assert (halv.records_in, halv.records_out) == (10, 5)
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:cntjob:batch1")
-    assert len(jobs) > 1  # the legacy path pays one action per stage
 
 
 class _TwoSidedExtractor(Extractor):
@@ -123,12 +108,11 @@ class _TwoSidedExtractor(Extractor):
         )
 
 
-def test_observe_dead_branch_default_backfills_count(spark):
-    """Default policy: a side the action never executes is backfilled
-    with a bounded count() — accounting never silently reads -1 after
-    an action ran."""
+def test_unexecuted_side_counted_once(spark):
+    """A side the action never executes is counted once with count() —
+    accounting never silently reads -1 after an action ran."""
     p = Pipeline(
-        {"name": "deadfill", "observe_timeout_s": 0.3},
+        {"name": "deadfill"},
         extractor=_TwoSidedExtractor(),
         loader=NoopLoader(),  # writes params only; packets side never runs
     )
@@ -137,36 +121,73 @@ def test_observe_dead_branch_default_backfills_count(spark):
     assert r.total_packets == 10  # packets(7) + params(3), exact
     load = next(s for s in r.stage_results if s.stage_name == "NoopLoader")
     assert load.records_in == 10
+    assert load.records_out == 3  # None from the loader: params rows only
 
 
-def test_observe_dead_branch_unknown_reads_minus_one(spark):
-    """observe_dead_branch='unknown': the dead side stays -1 (no extra
-    jobs), not a hang, and not a silent 0."""
+def test_etl_batch_runs_only_the_write_jobs(spark, hk_bin, tmp_path):
+    """Scan -> decom -> calibration -> parquet through the Pipeline runs
+    exactly the jobs of a bare ``write_parquet_per_parameter`` of the same
+    plan: accounting adds no job (no dead-branch count(), no loader
+    count()), and the counts still equal the fixture's."""
+    from mission_data_pipeline_spark.operators import (
+        Calibration,
+        ParameterDefinition,
+        apply_calibrations,
+        decommutate,
+    )
+    from mission_data_pipeline_spark.sinks import write_parquet_per_parameter
+    from mission_data_pipeline_spark.sources import read_packets
+    from mission_data_pipeline_spark.stages import (
+        BinaryPacketExtractor,
+        CalibrationTransformer,
+        DecomTransformer,
+        ParquetLoader,
+    )
+
+    params = [
+        {"name": "obc_temp_dn", "apid": 0x100, "byte_offset": 0, "bit_length": 16},
+        {"name": "bus_voltage_dn", "apid": 0x100, "byte_offset": 2, "bit_length": 16},
+        {"name": "bat_current_dn", "apid": 0x100, "byte_offset": 4, "bit_length": 16},
+    ]
+    cal = {"parameter": "obc_temp_dn", "method": "polynomial",
+           "coefficients": [-55.0, 0.04394531], "unit": "degC"}
+    n_packets, n_params = 200, 200 * len(params)
+
     p = Pipeline(
-        {
-            "name": "dead",
-            "observe_timeout_s": 0.3,
-            "observe_dead_branch": "unknown",
-        },
-        extractor=_TwoSidedExtractor(),
-        loader=NoopLoader(),
+        {"name": "etljobs"},
+        extractor=BinaryPacketExtractor({"path": hk_bin, "sec_hdr_length": 4}),
+        transformers=[
+            DecomTransformer({"parameters": params}),
+            CalibrationTransformer({"calibrations": [cal]}),
+        ],
+        loader=ParquetLoader({"output_dir": str(tmp_path / "pipe")}),
     )
     r = p.run(spark)
     assert r.ok
-    # the packets observation is unresolvable → the group reads unknown
-    assert r.total_packets == 0
-    load = next(s for s in r.stage_results if s.stage_name == "NoopLoader")
-    assert load.records_in == -1
+    counts = [(s.stage_name, s.records_in, s.records_out) for s in r.stage_results]
+    assert counts == [
+        ("DecomTransformer", n_packets, n_packets + n_params),
+        ("CalibrationTransformer", n_packets + n_params, n_packets + n_params),
+        ("ParquetLoader", n_packets + n_params, n_params),
+    ]
+    assert r.total_packets == n_packets
 
-
-def test_observe_counts_off(spark):
-    p = Pipeline(
-        {"name": "off", "count_records": False},
-        extractor=RangeExtractor(n_batches=1, rows=4),
-        loader=NoopLoader(),
-    )
-    r = p.run(spark)
-    assert r.ok
-    assert r.total_packets == 0
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:off:batch1")
-    assert len(jobs) == 1
+    sc = spark.sparkContext
+    sc.setJobGroup("etljobs-bare", "bare write of the same plan", False)
+    try:
+        bare = apply_calibrations(
+            decommutate(
+                read_packets(spark, hk_bin, sec_hdr_length=4),
+                [ParameterDefinition(**d) for d in params],
+            ),
+            [Calibration(cal["parameter"], cal["method"],
+                         tuple(cal["coefficients"]), unit=cal["unit"])],
+        )
+        write_parquet_per_parameter(bare, str(tmp_path / "bare"))
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    tracker = sc.statusTracker()
+    pipe_jobs = tracker.getJobIdsForGroup("mdps:etljobs:batch1")
+    bare_jobs = tracker.getJobIdsForGroup("etljobs-bare")
+    assert len(bare_jobs) >= 1
+    assert len(pipe_jobs) == len(bare_jobs), (pipe_jobs, bare_jobs)

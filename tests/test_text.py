@@ -577,7 +577,9 @@ def test_heavy_tail_join_equivalence(spark):
 
 def test_heldout_backoff_branches(spark):
     """All three probability branches must fire and be correct: seen
-    bigram (train ratio), backoff (unseen bigram, seen word), OOV."""
+    bigram (train ratio), backoff (unseen bigram, seen word), OOV. An
+    empty train doc adds no tokens; a scored doc with no bigram yields
+    no row."""
     import math
 
     from mission_data_pipeline_spark.operators.text import (
@@ -585,16 +587,18 @@ def test_heldout_backoff_branches(spark):
     )
 
     train = spark.createDataFrame(
-        [(1, "a b a b a c")], "doc_id long, text string"
+        [(1, "a b a b a c"), (2, "")], "doc_id long, text string"
     )
     # "a b": seen (C=2, C(a ·)=3) -> -ln(2/3)
     # "b z": z seen? z not in train -> OOV -> -ln(0.4/(6+1))
     # "z a": head z unseen but bigram unseen, second word a seen ->
     #        backoff -> -ln(0.4 * C(a)=3 / 6)
     score = spark.createDataFrame(
-        [(10, "a b z a")], "doc_id long, text string"
+        [(10, "a b z a"), (12, "solo")], "doc_id long, text string"
     )
-    r = heldout_backoff_logprob(train, score, alpha=0.4).collect()[0]
+    rows = heldout_backoff_logprob(train, score, alpha=0.4).collect()
+    assert [r["doc_id"] for r in rows] == [10]  # "solo" has no bigram
+    r = rows[0]
     assert (r["n_bigrams"], r["n_backoff"], r["n_oov"]) == (3, 1, 1)
     exp = (
         -math.log(2 / 3)          # a b
@@ -602,37 +606,6 @@ def test_heldout_backoff_branches(spark):
         + -math.log(0.4 * 3 / 6)  # z a (backoff to unigram a)
     ) / 3
     assert abs(r["neg_logprob"] - exp) < 1e-5
-
-
-def test_heldout_backoff_single_pass_train_identical(spark):
-    """single_pass_train=True (one (gh,hh) pair-count table deriving
-    cb/ch, ctot from cf — the corpus-scale shape) must produce exactly
-    the default two-pass form's rows, all three branches included."""
-    from mission_data_pipeline_spark.operators.text import (
-        heldout_backoff_logprob,
-    )
-
-    train = spark.createDataFrame(
-        [(1, "a b a b a c"), (2, "c d e e e"), (3, "")],
-        "doc_id long, text string",
-    )
-    score = spark.createDataFrame(
-        [(10, "a b z a"), (11, "e e q"), (12, "solo")],
-        "doc_id long, text string",
-    )
-    two = sorted(
-        map(tuple, heldout_backoff_logprob(train, score).collect())
-    )
-    one = sorted(
-        map(
-            tuple,
-            heldout_backoff_logprob(
-                train, score, single_pass_train=True
-            ).collect(),
-        )
-    )
-    assert one == two
-    assert len(two) == 2  # doc 12 has no bigrams
 
 
 def test_canonicalize_url_variants(spark):
